@@ -1,13 +1,12 @@
 """Isolation benchmarks for the optimization round (guide §1.4): times each
 declared bench query through the noop sink with per-phase breakdown
-(register / plan / execute), dumps .explain("formatted") for each, and
-times the dedup pipeline per stage at local[$SPARK_GRAFT_CPUS].
+(register / plan / execute) and dumps .explain("formatted") for each, at
+local[$SPARK_GRAFT_CPUS]. Per-stage pipeline timings come from perfbench.
 
 NOT part of the driver contract — bench.py is the frozen headline bench.
 
 Usage:
     python bench_extra.py queries   [names...]   # per-query phases + plans
-    python bench_extra.py pipeline               # dedup stage times
     python bench_extra.py plans <outdir>         # just dump plans
 """
 
@@ -82,25 +81,10 @@ def dump_plans(outdir, suffix="before", names=None):
     spark.stop()
 
 
-def run_pipeline():
-    from bench import _fixture_parquet, run_dedup
-
-    spark = _build()
-    n_base = int(os.environ.get("SYLPH_BENCH_IMAGES", "32000"))
-    path = _fixture_parquet(n_base, spark=spark)
-    for i in range(3):
-        st = {}
-        dt, n = run_dedup(spark, path, stage_times=st)
-        print(json.dumps({"run": i, "sec": round(dt, 3), "stages": st}), flush=True)
-    spark.stop()
-
-
 if __name__ == "__main__":
     mode = sys.argv[1] if len(sys.argv) > 1 else "queries"
     if mode == "queries":
         run_queries(sys.argv[2:] or None)
-    elif mode == "pipeline":
-        run_pipeline()
     elif mode == "plans":
         outdir = sys.argv[2] if len(sys.argv) > 2 else "plans/r06"
         suffix = sys.argv[3] if len(sys.argv) > 3 else "before"

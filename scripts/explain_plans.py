@@ -3,74 +3,47 @@ key entry queries to PLANS.md, and grep for the properties we require —
 pushed filters, pruned schemas, broadcast/codegen spans, no cartesian
 products. Run after plan-affecting changes.
 
-Covers the full 10-stage graph (sketches → shingle_counts → candidates →
+Walks the pipeline's stage graph (sketches → shingle_counts → candidates →
 pair_shingles → scored → gated → rescored → verified → clusters →
-survivors). The CC stage is iterative (plan depends on convergence), so the
-audit captures its first-iteration edge/label plan via the stage inputs.
+survivors) with a materializer that records each stage's plan and then
+checkpoints it. The CC stage is iterative (plan depends on convergence), so
+the audit captures its post-CC label-join plan.
 """
 
 from __future__ import annotations
 
-import contextlib
-import io
 import sys
 
 sys.path.insert(0, ".")
 
 from sylph_spark import fixtures
 from sylph_spark.config import SketchConfig
-from sylph_spark.pipeline import DedupPipeline, images_df_from_pandas
+from sylph_spark.pipeline import STAGES, DedupPipeline, images_df_from_pandas
 from sylph_spark.session import build_spark
 
 
 def explain_str(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
 
 
 def main() -> None:
     spark = build_spark("plans", master="local[8]", shuffle_partitions=8)
     images, _ = fixtures.generate_corpus(60, 42)
-    cfg = SketchConfig()
     p = DedupPipeline.__new__(DedupPipeline)
-    p.spark, p.cfg = spark, cfg
-    idf = images_df_from_pandas(spark, images)
+    p.spark, p.cfg = spark, SketchConfig()
+    plans = {}
 
-    sections = {}
-    sk = p._stage_sketches(idf)
-    sections["stage1_sketches"] = explain_str(sk)
-    sk = sk.localCheckpoint()
-    cnt = p._stage_shingle_counts(sk)
-    sections["stage2_shingle_counts"] = explain_str(cnt)
-    cnt = cnt.localCheckpoint()
-    n_items = sk.count()
-    n_vocab = cnt.count()
-    cand = p._stage_candidates(sk, cnt, n_items, n_vocab)
-    sections["stage3_candidates"] = explain_str(cand)
-    cand = cand.localCheckpoint()
-    pairsh = p._stage_pair_shingles(cand, sk, cnt)
-    sections["stage4_pair_shingles"] = explain_str(pairsh)
-    pairsh = pairsh.localCheckpoint()
-    scored = p._stage_scored(pairsh)
-    sections["stage5_scored"] = explain_str(scored)
-    scored = scored.localCheckpoint()
-    gated = p._stage_gated(scored, sk)
-    sections["stage6_gated"] = explain_str(gated)
-    gated = gated.localCheckpoint()
-    rescored = p._stage_rescored(scored, pairsh, sk, cnt, n_items)
-    sections["stage7_rescored"] = explain_str(rescored)
-    rescored = rescored.localCheckpoint()
-    verified = p._stage_verified(rescored, gated)
-    sections["stage8_verified"] = explain_str(verified)
-    verified = verified.localCheckpoint()
-    clusters = p._stage_clusters(sk, gated)
-    sections["stage9_clusters(post-CC label join)"] = explain_str(clusters)
-    clusters = clusters.localCheckpoint()
-    sections["stage10_survivors"] = explain_str(
-        p._stage_survivors(clusters, verified)
-    )
+    def explain_then_checkpoint(node, build):
+        out = build()
+        if node.mode == "count":
+            return out.count()
+        plans[node.name] = explain_str(out)
+        return out.localCheckpoint()
+
+    p.run_graph(images_df_from_pandas(spark, images), explain_then_checkpoint)
+    sections = {f"stage{i + 1}_{s}": plans[s] for i, s in enumerate(STAGES)}
 
     import __spark_entry__ as E
 

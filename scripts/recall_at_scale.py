@@ -21,13 +21,17 @@ def main(path=".bench_cache/images_big.parquet", n_base=300_000, cpus=32):
     assert len(survivors) == len(set(labels.values())), "1 survivor / cluster"
     assert all(labels[s] == c for s, c in survivors.items()), "member of own cluster"
     plan = _plan(n_base)
+    # every planned id must be labelled: a pair of two missing ids would
+    # otherwise compare None == None and count as a hit
+    unlabelled = [i for i in range(len(plan)) if f"img{i:010d}" not in labels]
+    assert not unlabelled, f"{len(unlabelled)} planned ids unlabelled"
     hits = misses = neg_bad = neg_total = 0
     by_kind = {}
     for row_idx, (kind, base_idx) in enumerate(plan):
         if kind == "base":
             continue
         rid, bid = f"img{row_idx:010d}", f"img{base_idx:010d}"
-        same = labels.get(rid) == labels.get(bid)
+        same = labels[rid] == labels[bid]
         if kind == "negative":
             neg_total += 1
             neg_bad += int(same)

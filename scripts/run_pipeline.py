@@ -51,7 +51,9 @@ def main() -> None:
         pdf, _ = fixtures.generate_corpus(n_base=args.fixture, seed=cfg.seed)
         images = images_df_from_pandas(spark, pdf)
     elif args.images:
-        images = spark.read.parquet(args.images)
+        from sylph_spark.sources.images import read_images
+
+        images = read_images(spark, args.images)
     else:
         ap.error("one of --images / --fixture is required")
 

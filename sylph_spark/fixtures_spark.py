@@ -21,11 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import codecs, fixtures
-
-IMAGES_SCHEMA = (
-    "image_id string, bytes binary, w int, h int, fmt string, caption string, "
-    "phash long"
-)
+from .sources.images import IMAGES_SCHEMA
 
 # per-1000-base row-class layout mirroring fixtures.generate_corpus
 _CLASSES = [

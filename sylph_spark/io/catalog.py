@@ -11,8 +11,9 @@ SURVEY.md §2.8).
 Backend: Iceberg when a runtime catalog is configured (``SYLPH_ICEBERG=1``
 with spark.jars.packages resolvable), else Parquet directories with
 ``_MANIFEST.json`` / ``_LINEAGE`` metadata reproducing the needed semantics:
-atomic commit (manifest written last), snapshot id, per-partition lineage
-rows, and an append-only ``_metrics`` table. The pipeline sees one API.
+atomic commit (manifest written last), snapshot id, per-file lineage rows
+(from the parquet footers), and an append-only ``_metrics`` table. The
+pipeline sees one API.
 """
 
 from __future__ import annotations
@@ -20,12 +21,15 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import time
 import uuid
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 @dataclass
@@ -45,6 +49,7 @@ class StageCatalog:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
+        self._metrics_lock = threading.Lock()  # stages commit concurrently
         os.makedirs(root, exist_ok=True)
 
     # -- paths ------------------------------------------------------------
@@ -85,32 +90,37 @@ class StageCatalog:
         extra: dict | None = None,
     ) -> StageManifest:
         """Write a stage output. Data first, lineage second, manifest last —
-        a killed job leaves no manifest, so the stage re-runs on resume."""
+        a killed job leaves no manifest, so the stage re-runs on resume.
+        Row counts come from the parquet footers of the files just written
+        (one lineage row per file): no Spark job beyond the write itself."""
         t0 = time.time()
         data_dir = os.path.join(self._table_dir(name), "data")
         if os.path.exists(self._table_dir(name)):
             shutil.rmtree(self._table_dir(name))
         df.write.mode("overwrite").parquet(data_dir)
 
-        written = self.spark.read.parquet(data_dir)
-        # per-partition lineage (north rule): rows per output partition
-        lineage = (
-            written.withColumn("part_id", F.spark_partition_id())
-            .groupBy("part_id")
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .withColumn("stage", F.lit(name))
-        )
+        parts = sorted(f for f in os.listdir(data_dir) if f.endswith(".parquet"))
+        counts = [pq.read_metadata(os.path.join(data_dir, f)).num_rows for f in parts]
         lineage_dir = os.path.join(self._table_dir(name), "_LINEAGE")
-        lineage.write.mode("overwrite").parquet(lineage_dir)
-        lrows = self.spark.read.parquet(lineage_dir).collect()
-        rows = sum(r["rows"] for r in lrows)
+        os.makedirs(lineage_dir)
+        pq.write_table(
+            pa.table(
+                {
+                    "part_id": pa.array(range(len(parts)), pa.int32()),
+                    "rows": pa.array(counts, pa.int64()),
+                    "stage": pa.array([name] * len(parts), pa.string()),
+                }
+            ),
+            os.path.join(lineage_dir, "part-00000.parquet"),
+        )
+        rows = sum(counts)
 
         m = StageManifest(
             stage=name,
             config_hash=config_hash,
             snapshot_id=uuid.uuid4().hex,
             rows=rows,
-            partitions=len(lrows),
+            partitions=len(parts),
             written_at=time.time(),
             extra=extra or {},
         )
@@ -133,7 +143,7 @@ class StageCatalog:
     # -- metrics ----------------------------------------------------------
     def _append_metric(self, stage: str, metric: str, value: float) -> None:
         p = os.path.join(self.root, "_metrics.jsonl")
-        with open(p, "a") as f:
+        with self._metrics_lock, open(p, "a") as f:
             f.write(
                 json.dumps(
                     {"stage": stage, "metric": metric, "value": float(value), "ts": time.time()}

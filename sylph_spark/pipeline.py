@@ -1,8 +1,19 @@
 """The staged Spark dedup pipeline (SURVEY.md §3 graft lifecycle).
 
-Stages (each commits a checkpointed table via StageCatalog; a killed job
-resumes at the first stage without a committed manifest for the current
-config hash):
+The stages are declared once, as data (``GRAPH``: name, inputs, builder
+``_stage_<name>``, volatile materialization), plus two row-count nodes
+(``n_items``, ``n_vocab``). One runner (``DedupPipeline.run_graph``) starts
+every node as soon as its inputs are ready and runs its jobs under job
+group ``stage.<name>``. Two materializers drive it:
+
+- commit (``DedupPipeline.run``): each stage is written to the
+  StageCatalog and read back; row counts come from the manifests. A killed
+  job resumes at the stages without a committed manifest for the current
+  config hash and input fingerprint.
+- volatile (``run_volatile``): localCheckpoint barriers or lazy stages, no
+  catalog; row counts come from count().
+
+Stages:
 
   1. sketches       images → per-item shingle sets + SimHash  (sketch.rs:276-475 analog)
   2. shingle_counts corpus-wide shingle multiplicities        (A1, sketch.rs:690-731)
@@ -37,38 +48,59 @@ Scale design notes (for the 10^12-row cluster, tested at local[*]):
 
 from __future__ import annotations
 
+import threading
+import time
+from collections.abc import Callable
+from concurrent.futures import Future, ThreadPoolExecutor
+from contextlib import nullcontext
+from typing import Any, NamedTuple
+
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.util import inheritable_thread_target
 
 from . import udfs
 from .cc import connected_components, pair_cluster_labels
 from .config import SketchConfig
 from .io.catalog import StageCatalog
 from .session import heavy_payload_batches
+from .sources.images import IMAGES_SCHEMA
+
 
 def input_fingerprint(images: DataFrame) -> str:
     """Cheap identity of the input table for checkpoint validity.
 
     File-backed inputs (the production case — Iceberg/parquet snapshots)
-    fingerprint by their sorted file list: zero data scan, and any new
-    snapshot/compaction changes the set. Non-file inputs (test DataFrames)
-    fall back to an order-insensitive CONTENT probe (count + bit_xor of a
-    row hash over id, payload bytes, caption and phash — one pass, no
-    overflow under ANSI mode): regenerated fixtures with the same ids but
-    different bytes/captions must invalidate the checkpoint, not revalidate
-    it. The payload hashes by VALUE (xxhash64 over the binary) — the
-    earlier length(bytes) proxy let a same-length byte edit revalidate a
-    stale checkpoint; the full hash costs one extra scan of a test-sized
-    input only (file-backed inputs never take this path)."""
+    fingerprint by their sorted file list plus each file's length and
+    modification time from the Hadoop FileSystem status (any URI scheme):
+    zero data scan, any new snapshot/compaction changes the set, and a file
+    rewritten in place under the same name changes its status. Non-file
+    inputs (test DataFrames) fall back to an order-insensitive CONTENT probe
+    (count + bit_xor of a row hash over id, payload bytes, caption and
+    phash — one pass, no overflow under ANSI mode): regenerated fixtures
+    with the same ids but different bytes/captions must invalidate the
+    checkpoint, not revalidate it. The payload hashes by VALUE (xxhash64
+    over the binary) — the earlier length(bytes) proxy let a same-length
+    byte edit revalidate a stale checkpoint; the full hash costs one extra
+    scan of a test-sized input only (file-backed inputs never take this
+    path)."""
     import hashlib
     import json
 
     files = sorted(images.inputFiles())
     if files:
-        token = json.dumps(files)
+        spark = images.sparkSession
+        hadoop_path = spark._jvm.org.apache.hadoop.fs.Path  # one class lookup
+        conf = spark._jsc.hadoopConfiguration()
+        status = []
+        for f in files:
+            path = hadoop_path(f)
+            st = path.getFileSystem(conf).getFileStatus(path)
+            status.append((f, st.getLen(), st.getModificationTime()))
+        token = json.dumps(status)
     else:
         row = images.agg(
             F.count(F.lit(1)).alias("n"),
@@ -107,18 +139,61 @@ def lcs_prefilter_stats(
     }
 
 
-STAGES = [
-    "sketches",
-    "shingle_counts",
-    "candidates",
-    "pair_shingles",
-    "scored",
-    "gated",
-    "rescored",
-    "verified",
-    "clusters",
-    "survivors",
-]
+class Node(NamedTuple):
+    """One vertex of the stage graph.
+
+    ``inputs`` are passed positionally to the builder ``_stage_<name>``
+    (``images`` is the run's input table). ``mode`` is the volatile
+    materialization: ``checkpoint`` (localCheckpoint), ``lazy`` (fused by
+    Catalyst into the consumer's barrier) or ``count`` (row count of the one
+    input; the committed path reads it from that stage's manifest).
+    ``timer`` is the run_volatile stage_times key. ``heavy`` scopes the node
+    in heavy_payload_batches — session-global confs, safe only for a node
+    that every other node depends on, so nothing overlaps it."""
+
+    name: str
+    inputs: tuple[str, ...]
+    mode: str = "lazy"
+    timer: str | None = None
+    heavy: bool = False
+
+
+GRAPH = (
+    Node("sketches", ("images",), "checkpoint", "sketches", heavy=True),
+    Node("shingle_counts", ("sketches",), "checkpoint", "shingle_counts"),
+    Node("n_items", ("sketches",), "count", "counts(2)"),
+    Node("n_vocab", ("shingle_counts",), "count", "counts(2)"),
+    Node("candidates", ("sketches", "shingle_counts", "n_items", "n_vocab")),
+    # pair_shingles feeds both scoring passes; scored feeds gated + rescored
+    Node(
+        "pair_shingles",
+        ("candidates", "sketches", "shingle_counts"),
+        "checkpoint",
+        "cands+pair_shingles",
+    ),
+    Node("scored", ("pair_shingles",), "checkpoint", "scored"),
+    Node("gated", ("scored", "sketches"), "checkpoint", "gated"),
+    Node(
+        "rescored",
+        ("scored", "pair_shingles", "sketches", "shingle_counts", "n_items"),
+        "checkpoint",
+        "rescored",
+    ),
+    # lazy: survivors references it once and both join inputs are barriers
+    Node("verified", ("rescored", "gated")),
+    # the CC driver loop materializes the gated edge chain itself
+    Node("clusters", ("sketches", "gated"), timer="clusters(cc)"),
+    Node("survivors", ("clusters", "verified")),
+)
+
+# the ten table stages, in dependency order
+STAGES = [n.name for n in GRAPH if n.mode != "count"]
+
+_JOB_GROUP_PROPS = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
+)
 
 
 class DedupPipeline:
@@ -633,6 +708,55 @@ class DedupPipeline:
 
     # -- orchestration -----------------------------------------------------
 
+    def run_graph(
+        self,
+        images: DataFrame,
+        materialize: Callable[[Node, Callable[[], Any]], Any],
+        stage_times: dict | None = None,
+    ) -> dict[str, DataFrame]:
+        """Run GRAPH once: every node is a future that waits on its inputs'
+        futures, in a pool as wide as the graph, so each node starts as soon
+        as its inputs are ready (shingle_counts ∥ n_items, gated ∥ rescored,
+        clusters ∥ the rescored tail — guide §2.6).
+
+        ``materialize(node, build)`` turns the node's builder thunk into its
+        value. Each node's jobs run under job group ``stage.<name>``, set on
+        the thread that materializes it; the inherited group is restored on
+        return. ``stage_times`` accumulates build + materialize wall seconds
+        per ``node.timer``; timed nodes overlap on the wall clock."""
+        sc = self.spark.sparkContext
+        lock = threading.Lock()
+        futs: dict[str, Future] = {}
+
+        def run_node(node: Node) -> Any:
+            args = [images if i == "images" else futs[i].result() for i in node.inputs]
+            if node.mode == "count":
+                builder = lambda df: df  # noqa: E731 - the materializer counts
+            else:
+                builder = getattr(self, f"_stage_{node.name}")
+            prev = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS}
+            sc.setJobGroup(f"stage.{node.name}", node.name)
+            try:
+                with heavy_payload_batches(self.spark) if node.heavy else nullcontext():
+                    t0 = time.perf_counter()
+                    out = materialize(node, lambda: builder(*args))
+                    dt = time.perf_counter() - t0
+            finally:
+                for k, v in prev.items():
+                    sc.setLocalProperty(k, v)
+            if stage_times is not None and node.timer:
+                with lock:
+                    stage_times[node.timer] = round(
+                        stage_times.get(node.timer, 0.0) + dt, 3
+                    )
+            return out
+
+        with ThreadPoolExecutor(max_workers=len(GRAPH)) as pool:
+            for node in GRAPH:  # topological: every input is submitted first
+                target = inheritable_thread_target(self.spark)(run_node)
+                futs[node.name] = pool.submit(target, node)
+            return {s: futs[s].result() for s in STAGES}
+
     def run(self, images: DataFrame, force: bool = False) -> dict[str, DataFrame]:
         """Run all stages, skipping any whose committed manifest matches the
         current config hash AND input fingerprint (checkpoint/resume, north
@@ -640,59 +764,22 @@ class DedupPipeline:
         cat, h = self.catalog, self.h
         fp = input_fingerprint(images)
 
-        def ensure(name: str, builder) -> DataFrame:
-            if force or not cat.has_valid(name, h, fp):
-                cat.write(builder(), name, h, extra={"input_fp": fp})
-            return cat.read(name)
+        def commit(node: Node, build: Callable[[], Any]) -> Any:
+            if node.mode == "count":  # no re-count: the manifest has the rows
+                return cat.manifest(node.inputs[0]).rows
+            if force or not cat.has_valid(node.name, h, fp):
+                cat.write(build(), node.name, h, extra={"input_fp": fp})
+            return cat.read(node.name)
 
-        # only the sketch stage touches ~100 KB binary rows: scope the small
-        # batch confs to it so every later (small-row) stage keeps the
-        # generic batch sizes
-        with heavy_payload_batches(self.spark):
-            sketches = ensure("sketches", lambda: self._stage_sketches(images))
-        counts = ensure(
-            "shingle_counts", lambda: self._stage_shingle_counts(sketches)
-        )
-        # row counts come from the committed manifests — no re-count actions
-        n_items = cat.manifest("sketches").rows
-        n_vocab = cat.manifest("shingle_counts").rows
-        candidates = ensure(
-            "candidates",
-            lambda: self._stage_candidates(sketches, counts, n_items, n_vocab),
-        )
-        pair_shingles = ensure(
-            "pair_shingles",
-            lambda: self._stage_pair_shingles(candidates, sketches, counts),
-        )
-        scored = ensure("scored", lambda: self._stage_scored(pair_shingles))
-        gated = ensure("gated", lambda: self._stage_gated(scored, sketches))
-        rescored = ensure(
-            "rescored",
-            lambda: self._stage_rescored(
-                scored, pair_shingles, sketches, counts, n_items
-            ),
-        )
-        verified = ensure(
-            "verified", lambda: self._stage_verified(rescored, gated)
-        )
-        clusters = ensure(
-            "clusters", lambda: self._stage_clusters(sketches, gated)
-        )
-        survivors = ensure(
-            "survivors", lambda: self._stage_survivors(clusters, verified)
-        )
-        return {
-            "sketches": sketches,
-            "shingle_counts": counts,
-            "candidates": candidates,
-            "pair_shingles": pair_shingles,
-            "scored": scored,
-            "gated": gated,
-            "rescored": rescored,
-            "verified": verified,
-            "clusters": clusters,
-            "survivors": survivors,
-        }
+        return self.run_graph(images, commit)
+
+
+def _materialize_volatile(node: Node, build: Callable[[], Any]) -> Any:
+    """In-memory materialization: localCheckpoint, lazy, or a count()."""
+    out = build()
+    if node.mode == "checkpoint":
+        return out.localCheckpoint()
+    return out.count() if node.mode == "count" else out
 
 
 def run_volatile(
@@ -701,130 +788,18 @@ def run_volatile(
     cfg: SketchConfig,
     stage_times: dict | None = None,
 ) -> dict[str, DataFrame]:
-    """Run all stages in-memory (localCheckpoint between stages, no catalog).
-    For tests/smoke runs; production runs use DedupPipeline.run (resumable).
+    """Run all stages in-memory (no catalog). For tests/smoke runs;
+    production runs use DedupPipeline.run (resumable).
 
     ``stage_times``: optional dict filled with the wall seconds each EAGER
-    materialization barrier took (localCheckpoint / count / the CC driver
-    loop) — the per-stage attribution behind the scaling-efficiency
-    evidence (BENCH/BASELINE.md). Lazy single-consumer stages (candidates,
-    verified, survivors) are fused by Catalyst into the next barrier and
-    show up there."""
-    import time as _t
-
-    def timed(name, fn):
-        t0 = _t.time()
-        out = fn()
-        if stage_times is not None:
-            stage_times[name] = round(
-                stage_times.get(name, 0.0) + _t.time() - t0, 3
-            )
-        return out
-
+    barrier took (localCheckpoint / count / the CC driver loop) — the
+    per-stage attribution behind the scaling-efficiency evidence
+    (BENCH/BASELINE.md). Lazy stages (candidates, verified, survivors) are
+    fused by Catalyst into the next barrier and show up there."""
     p = DedupPipeline.__new__(DedupPipeline)
     p.spark, p.cfg = spark, cfg
-    # only sketches is consumed by 4 downstream stages — checkpoint it once;
-    # everything else is single-consumer and stays lazily fused by Catalyst
-    # (the CC loop materializes the edge chain exactly once itself)
-    with heavy_payload_batches(spark):  # image-bytes stage only
-        sketches = timed(
-            "sketches", lambda: p._stage_sketches(images).localCheckpoint()
-        )
-    # n_items (a 1-row count over the checkpointed sketches) is independent
-    # of the shingle_counts aggregation — overlap the two jobs (guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        counts_f = pool.submit(
-            lambda: timed(
-                "shingle_counts",
-                lambda: p._stage_shingle_counts(sketches).localCheckpoint(),
-            )
-        )
-        n_items_f = pool.submit(
-            lambda: timed("counts(2)", lambda: sketches.count())
-        )
-        counts = counts_f.result()
-        n_items = n_items_f.result()
-    n_vocab = timed("counts(2)", lambda: counts.count())  # tiny count
-    candidates = p._stage_candidates(sketches, counts, n_items, n_vocab)
-    # pair_shingles feeds scored + rescored (both scoring passes);
-    # the lazy candidates stage materializes inside this barrier
-    pair_shingles = timed(
-        "cands+pair_shingles",
-        lambda: p._stage_pair_shingles(
-            candidates, sketches, counts
-        ).localCheckpoint(),
-    )
-    # scored feeds gated + rescored (item scores)
-    scored = timed(
-        "scored", lambda: p._stage_scored(pair_shingles).localCheckpoint()
-    )
-    # gated (pandas_udf LCS gate) and rescored (winner-table join chain)
-    # depend only on scored/pair_shingles/sketches — not on each other — so
-    # their materializations run as two concurrent jobs (guide §2.6: overlap
-    # independent jobs so one barrier's straggler tail back-fills with the
-    # other's tasks). Results are unchanged: both plans are deterministic
-    # and the scheduler only interleaves their tasks. Their stage_times
-    # overlap on the wall clock (sum of stages ≥ elapsed).
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        gated_f = pool.submit(
-            lambda: timed(
-                "gated",
-                lambda: p._stage_gated(scored, sketches).localCheckpoint(),
-            )
-        )
-        rescored_f = pool.submit(
-            lambda: timed(
-                "rescored",
-                lambda: p._stage_rescored(
-                    scored, pair_shingles, sketches, counts, n_items
-                ).localCheckpoint(),
-            )
-        )
-        gated = gated_f.result()
-        # clusters depends only on gated (see module docstring) — its CC
-        # driver loop (bounded Arrow collect + numpy) overlaps the tail of
-        # the rescored materialization (guide §2.6)
-        clusters_f = pool.submit(
-            lambda: timed(
-                "clusters(cc)", lambda: p._stage_clusters(sketches, gated)
-            )
-        )
-        rescored = rescored_f.result()
-        clusters = clusters_f.result()
-    # verified stays LAZY: its only downstream consumer (survivors'
-    # rep_score) references it once since the explode-based contrib, and
-    # both join inputs (rescored, gated) are already checkpointed — the
-    # tiny join fuses into the survivors job instead of paying its own
-    # materialization barrier (so it gets no stage_times entry: plan
-    # construction is not a barrier)
-    verified = p._stage_verified(rescored, gated)
-    survivors = p._stage_survivors(clusters, verified)
-    return {
-        "sketches": sketches,
-        "shingle_counts": counts,
-        "candidates": candidates,
-        "pair_shingles": pair_shingles,
-        "scored": scored,
-        "gated": gated,
-        "rescored": rescored,
-        "verified": verified,
-        "clusters": clusters,
-        "survivors": survivors,
-    }
+    return p.run_graph(images, _materialize_volatile, stage_times)
 
 
 def images_df_from_pandas(spark: SparkSession, images: pd.DataFrame) -> DataFrame:
-    schema = T.StructType(
-        [
-            T.StructField("image_id", T.StringType(), False),
-            T.StructField("bytes", T.BinaryType(), False),
-            T.StructField("w", T.IntegerType(), False),
-            T.StructField("h", T.IntegerType(), False),
-            T.StructField("fmt", T.StringType(), False),
-            T.StructField("caption", T.StringType(), False),
-            T.StructField("phash", T.LongType(), False),
-        ]
-    )
-    return spark.createDataFrame(images, schema=schema)
+    return spark.createDataFrame(images, schema=IMAGES_SCHEMA)

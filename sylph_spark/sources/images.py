@@ -29,10 +29,13 @@ def read_images(spark: SparkSession, path_or_table: str) -> DataFrame:
     no '/'), enforce the canonical schema, and route out unknown formats
     (the extension-dispatch analog, sketch.rs:95-121)."""
     if "/" in path_or_table:
+        # the enforced read schema would null-fill a missing column, so the
+        # files' own schema is validated first
+        validate_images_schema(spark.read.parquet(path_or_table))
         df = spark.read.schema(IMAGES_SCHEMA).parquet(path_or_table)
     else:
         df = spark.read.table(path_or_table)
-    validate_images_schema(df)
+        validate_images_schema(df)
     return df.filter(F.col("fmt").isin(*sorted(ALL_FMTS)))
 
 

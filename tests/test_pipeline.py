@@ -9,7 +9,7 @@ import pytest
 
 from sylph_spark import fixtures, oracle
 from sylph_spark.config import SketchConfig
-from sylph_spark.pipeline import DedupPipeline, images_df_from_pandas
+from sylph_spark.pipeline import STAGES, DedupPipeline, images_df_from_pandas
 
 
 @pytest.fixture(scope="module")
@@ -160,6 +160,10 @@ class TestResume:
         # no new write metrics → stages were skipped
         after = [m for m in pipe2.catalog.metrics() if m["metric"] == "rows"]
         assert len(after) == len(before)
+        # every stage's jobs ran under its own job group
+        tracker = spark.sparkContext.statusTracker()
+        for s in STAGES:
+            assert tracker.getJobIdsForGroup(f"stage.{s}"), s
 
     def test_config_change_invalidates(self, spark, spark_result, corpus):
         images, _ = corpus
@@ -189,6 +193,77 @@ class TestResume:
             assert m is not None and m.rows > 0
             lin = pipe.catalog.lineage(stage)
             assert lin.count() == m.partitions
+        for stage in STAGES:
+            assert pipe.catalog.manifest(stage).rows == pipe.catalog.read(stage).count()
+
+    def test_rewritten_input_file_invalidates(self, spark, corpus, tmp_path):
+        """A file of a committed input rewritten in place under the same
+        name must invalidate the stages computed from it."""
+        import glob
+        import os
+
+        import pyarrow.parquet as pq
+
+        from sylph_spark.io.catalog import StageCatalog
+        from sylph_spark.pipeline import input_fingerprint
+        from sylph_spark.sources.images import read_images
+
+        images, _ = corpus
+        src = str(tmp_path / "images")
+        images_df_from_pandas(spark, images).write.parquet(src)
+        cat = StageCatalog(spark, str(tmp_path / "catalog"))
+        h = SketchConfig().config_hash()
+        fp = input_fingerprint(read_images(spark, src))
+        cat.write(spark.range(3), "sketches", h, extra={"input_fp": fp})
+        assert cat.has_valid("sketches", h, input_fingerprint(read_images(spark, src)))
+        part = sorted(glob.glob(f"{src}/part-*.parquet"))[0]
+        pq.write_table(pq.read_table(part).slice(1), part)
+        # a non-Hadoop writer leaves no checksum sidecar behind
+        crc = os.path.join(src, f".{os.path.basename(part)}.crc")
+        os.remove(crc)
+        assert not cat.has_valid(
+            "sketches", h, input_fingerprint(read_images(spark, src))
+        )
+
+
+def test_catalog_metrics_concurrent_appends(tmp_path):
+    """Overlapping stage commits append to one _metrics.jsonl: every record
+    written from concurrent threads must read back whole."""
+    import sys
+    import threading
+
+    from sylph_spark.io.catalog import StageCatalog
+
+    cat = StageCatalog(None, str(tmp_path))
+
+    def append(i: int) -> None:
+        for j in range(200):
+            cat._append_metric(f"stage{i}", "rows", j)
+
+    threads = [threading.Thread(target=append, args=(i,)) for i in range(16)]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert len(cat.metrics()) == 16 * 200
+
+
+def test_images_missing_caption_rejected(spark, corpus, tmp_path):
+    """The CLI's --images path reads through read_images, which must reject
+    a table without the caption column (not null-fill it)."""
+    from sylph_spark.sources.images import read_images
+
+    images, _ = corpus
+    src = str(tmp_path / "nocap")
+    images_df_from_pandas(spark, images.head(4)).drop("caption").write.parquet(src)
+    with pytest.raises(ValueError, match="caption"):
+        read_images(spark, src)
 
 
 def test_lcs_short_circuit_identical(spark, spark_result):
@@ -352,12 +427,14 @@ def test_dense_bucket_interleaved_families(spark):
     assert lab_a != lab_b, "families merged across the heterogeneous bucket"
 
 
-def test_distributed_cc_pipeline_parity(spark, corpus, monkeypatch):
+def test_distributed_cc_pipeline_parity(spark, corpus, spark_result, monkeypatch):
     """VERDICT r4 #3: run the FULL pipeline with SYLPH_CC_DRIVER_THRESHOLD=0
     so both connected_components (clusters stage) and pair_cluster_labels
     (rescore competition scope) take the distributed propagation path — the
     code that actually runs at 100-TB edge counts — and assert clusters,
-    rescored pairs and survivors identical to the driver fast path."""
+    rescored pairs and survivors identical to the driver fast path. Both
+    materializers of the stage graph agree too: the volatile run equals the
+    committed DedupPipeline.run."""
     from sylph_spark.pipeline import run_volatile
 
     images, _ = corpus
@@ -378,7 +455,19 @@ def test_distributed_cc_pipeline_parity(spark, corpus, monkeypatch):
             ),
         }
 
-    base = stages(run_volatile(spark, df, cfg))
+    stage_times: dict = {}
+    base = stages(run_volatile(spark, df, cfg, stage_times=stage_times))
+    assert set(stage_times) == {
+        "sketches",
+        "shingle_counts",
+        "counts(2)",
+        "cands+pair_shingles",
+        "scored",
+        "gated",
+        "rescored",
+        "clusters(cc)",
+    }
+    assert stages(spark_result[1]) == base
     monkeypatch.setenv("SYLPH_CC_DRIVER_THRESHOLD", "0")
     dist = stages(run_volatile(spark, df, cfg))
     assert dist == base
