@@ -31,8 +31,7 @@ def explain_str(df) -> str:
 def main() -> None:
     spark = build_spark("plans", master="local[8]", shuffle_partitions=8)
     images, _ = fixtures.generate_corpus(60, 42)
-    p = DedupPipeline.__new__(DedupPipeline)
-    p.spark, p.cfg = spark, SketchConfig()
+    p = DedupPipeline(spark, SketchConfig())
     plans = {}
 
     def explain_then_checkpoint(node, build):

@@ -1,122 +1,146 @@
-"""Distributed connected components for the clustering stage.
+"""Connected components for the clustering and rescore stages.
 
-Min-label propagation with pointer jumping, checkpointed every iteration to
-cut lineage (SURVEY.md §4 custom work #3 — the reference has no analog; its
-"clusters" are implicit in the winner table contain.rs:410-459).
+One labeller, ``component_labels(edges)``, labels every edge and every
+endpoint with its component's minimum member id and the component size
+(sylph has no analog: its "clusters" are implicit in the winner table,
+contain.rs:410-459). ``connected_components(nodes, edges)`` is a left join
+of a node table onto those labels, so isolated nodes label themselves.
 
-Each iteration:
+Below ``SYLPH_CC_DRIVER_THRESHOLD`` edges (default 2M; 0 forces the
+distributed path) one bounded Arrow collect feeds a vectorized numpy
+min-label propagation on the driver: zero iterative shuffles. Above it, a
+distributed min-label propagation with pointer jumping runs, checkpointed
+every iteration to cut lineage:
+
   1. every node takes the min label over itself and its neighbors;
   2. pointer jumping: label(u) <- label(label(u)) (halves chain depth, so
      convergence is O(log diameter), not O(diameter));
   3. ``localCheckpoint`` truncates the plan; convergence is an exact
      count of changed labels == 0.
 
-Inputs/outputs are plain DataFrames, so the same routine serves any edge set
-(dedup clusters here, but any graph at 100 TB scale with the same shuffles).
+Both paths give identical labels. Node ids MUST be non-null strings (the
+framework's image_ids are): a component is labelled by its MIN id, and
+"min" is lexicographic only for strings.
 """
 
 from __future__ import annotations
 
 import os
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_DRIVER_THRESHOLD = 2_000_000
+MAX_ITER = 50
 
 
-def _resolve_driver_threshold(driver_threshold: int | None) -> int:
-    """Default edge-count cutoff for the driver fast path, overridable via
-    ``SYLPH_CC_DRIVER_THRESHOLD`` (set it to 0 to force the distributed
-    propagation loop — the code path that runs at 100-TB scale — through
-    any pipeline without touching call sites; used by the end-to-end
-    distributed-vs-driver parity audits)."""
-    if driver_threshold is not None:
-        return driver_threshold
+def component_labels(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Label every EDGE and every endpoint NODE of ``edges`` (id_a, id_b)
+    with its connected component, in one pass.
+
+    Returns ``(pairs, nodes)``:
+      pairs — (id_a, id_b, pre_cluster, csize), one row per input edge;
+      nodes — (image_id, pre_cluster, csize) over the edge endpoints;
+    where ``pre_cluster`` is the component's lexicographic-min member and
+    ``csize`` its member count.
+
+    The path probe and the edge fetch are ONE action: ``limit(t+1)``
+    bounds the driver transfer at t+1 id pairs as Arrow columns, and when
+    the probe says "small" the same table IS the edge list. On that path
+    the edge → label assignment is a numpy gather, so the caller pays one
+    bounded collect and zero Spark joins. Above the threshold, node labels
+    come from the distributed loop and pair labels from one join on
+    ``id_a`` (both endpoints of an edge share a component)."""
     env = os.environ.get("SYLPH_CC_DRIVER_THRESHOLD")
-    return int(env) if env else DEFAULT_DRIVER_THRESHOLD
-
-
-def connected_components(
-    nodes: DataFrame | None,
-    edges: DataFrame,
-    node_col: str = "image_id",
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    max_iter: int = 50,
-    driver_threshold: int | None = None,
-    with_sizes: bool = False,
-) -> DataFrame:
-    """Returns (node_col, cluster_id) where cluster_id = min node id in the
-    component. Deterministic; independent of input partitioning.
-
-    ``nodes=None`` labels only the edge endpoints (no isolated nodes) —
-    callers whose node universe IS the edge set (e.g. first-pass pair
-    participants) skip the node left-join and, on the driver path, get a
-    single Arrow local table with no Spark-side joins at all.
-    ``with_sizes=True`` appends a ``cluster_size`` column (isolated nodes
-    count 1): free on the driver path (np.bincount over the label codes),
-    one labels-table aggregation + join on the distributed path.
-
-    Node and edge id columns MUST be non-null strings (the framework's
-    image_ids are): both paths label a component by its MIN id, and "min"
-    is lexicographic only for strings — the driver path factorizes ids into
-    a fixed-width unicode array (so e.g. int ids would sort '10' < '2'
-    there but 2 < 10 in the distributed F.min path). The driver path
-    asserts this; pass string-cast columns for other id types.
-
-    Adaptive execution (same spirit as AQE's broadcast decision): when the
-    edge set is below ``driver_threshold`` the component labels are computed
-    driver-side with vectorized min-label propagation over the Arrow-collected
-    edge codes and joined back — zero iterative shuffles. Above it, the
-    distributed propagation loop runs. Both paths produce identical labels.
-    """
-    # Path probe and edge fetch in ONE action: limit(k+1).toArrow() bounds
-    # the driver transfer at threshold+1 id pairs (~tens of MB as Arrow
-    # columns — no Row objects), and when the probe says "small" the same
-    # table IS the edge list, so the small-graph case pays a single job
-    # instead of a count followed by a collect.
-    driver_threshold = _resolve_driver_threshold(driver_threshold)
-    pairs = edges.select(src_col, dst_col)
-    probe = pairs.limit(driver_threshold + 1).toArrow()
-    if probe.num_rows <= driver_threshold:
-        return _driver_cc(
-            nodes, edges.sparkSession, probe, node_col, src_col, dst_col, with_sizes
+    threshold = int(env) if env else DEFAULT_DRIVER_THRESHOLD
+    spark = edges.sparkSession
+    pairs = edges.select("id_a", "id_b")
+    probe = pairs.limit(threshold + 1).toArrow()
+    if probe.num_rows > threshold:
+        nodes = _distributed_cc(pairs)
+        labelled = pairs.join(
+            nodes.withColumnRenamed("image_id", "id_a"), "id_a"
+        ).select("id_a", "id_b", "pre_cluster", "csize")
+        return labelled, nodes
+    _check_edge_tbl(probe)
+    if probe.num_rows == 0:
+        return (
+            spark.createDataFrame(
+                [], "id_a string, id_b string, pre_cluster string, csize bigint"
+            ),
+            spark.createDataFrame(
+                [], "image_id string, pre_cluster string, csize bigint"
+            ),
         )
-    return _distributed_cc(
-        nodes, edges, node_col, src_col, dst_col, max_iter, with_sizes
+    a = probe.column("id_a").to_numpy(zero_copy_only=False)
+    b = probe.column("id_b").to_numpy(zero_copy_only=False)
+    uniq, label, ca = _numpy_cc(a, b)
+    sizes = np.bincount(label)
+    nodes = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "image_id": uniq,
+                "pre_cluster": uniq[label],
+                "csize": sizes[label].astype(np.int64),
+            }
+        )
+    )
+    el = label[ca]
+    labelled = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "id_a": a,
+                "id_b": b,
+                "pre_cluster": uniq[el],
+                "csize": sizes[el].astype(np.int64),
+            }
+        )
+    )
+    return labelled, nodes
+
+
+def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+    """(image_id, cluster_id) for every row of ``nodes``: the min member id
+    of its component over ``edges`` (id_a, id_b), itself when isolated.
+    Deterministic; independent of input partitioning."""
+    _, labels = component_labels(edges)
+    return (
+        nodes.select("image_id")
+        .join(labels.select("image_id", "pre_cluster"), "image_id", "left")
+        .select(
+            "image_id",
+            F.coalesce("pre_cluster", "image_id").alias("cluster_id"),
+        )
     )
 
 
-def _check_edge_tbl(edge_tbl, src_col: str, dst_col: str) -> None:
-    import pyarrow as pa
-
-    for col in (src_col, dst_col):
+def _check_edge_tbl(edge_tbl: pa.Table) -> None:
+    for col in ("id_a", "id_b"):
         t = edge_tbl.schema.field(col).type
         if not (pa.types.is_string(t) or pa.types.is_large_string(t)):
             raise TypeError(
-                f"connected_components requires string node ids; edge column "
+                f"connected components require string node ids; edge column "
                 f"{col!r} is {t} (cast to string — min-label semantics are "
                 f"lexicographic on both paths)"
             )
         if edge_tbl.column(col).null_count:
             raise ValueError(
-                f"connected_components: edge column {col!r} contains nulls "
+                f"connected components: edge column {col!r} contains nulls "
                 f"(they would stringify to the literal 'None')"
             )
 
 
-def _numpy_cc(edge_tbl, src_col: str, dst_col: str):
-    """Core driver-side CC: factorize string ids into codes (np.unique on a
+def _numpy_cc(a_obj: np.ndarray, b_obj: np.ndarray):
+    """Driver-side CC: factorize string ids into codes (np.unique on a
     fixed-width string array — C-speed sort, no per-edge Python), then
     min-label hooking + full pointer-jumping compression until fixpoint.
-    Returns (uniq, label, src_codes) — uniq[label] is each node's cluster
-    id (lexicographic-min member, code order = np.unique sort order) and
-    uniq[label[src_codes]] labels each EDGE by gather, for free."""
-    import numpy as np
-
-    a_obj = edge_tbl.column(src_col).to_numpy(zero_copy_only=False)
-    b_obj = edge_tbl.column(dst_col).to_numpy(zero_copy_only=False)
+    Returns (uniq, label, a_codes) — uniq[label] is each node's component
+    label (code order = np.unique sort order, so the min code is the
+    lexicographic-min member) and uniq[label[a_codes]] labels each edge."""
     both = np.concatenate([a_obj, b_obj]).astype("U")
     uniq, codes = np.unique(both, return_inverse=True)
     ca, cb = codes[: a_obj.size], codes[a_obj.size :]
@@ -136,161 +160,33 @@ def _numpy_cc(edge_tbl, src_col: str, dst_col: str):
     return uniq, label, ca
 
 
-def _driver_cc(
-    nodes: DataFrame | None,
-    spark,
-    edge_tbl,
-    node_col: str,
-    src_col: str,
-    dst_col: str,
-    with_sizes: bool,
-) -> DataFrame:
-    """Vectorized driver-side CC over an Arrow edge table (see _numpy_cc).
-    Replaces the dict union-find whose per-edge Python loop was ~2 s of
-    core-count-invariant driver time at bench scale (serial floor in the
-    scaling legs)."""
-    import numpy as np
-    import pandas as pd
+def _distributed_cc(edges: DataFrame) -> DataFrame:
+    """(image_id, pre_cluster, csize) over the endpoints of ``edges``.
 
-    _check_edge_tbl(edge_tbl, src_col, dst_col)
-    if edge_tbl.num_rows:
-        uniq, label, _ = _numpy_cc(edge_tbl, src_col, dst_col)
-        cols = {node_col: uniq, "cluster_id": uniq[label]}
-        if with_sizes:
-            cols["cluster_size"] = np.bincount(label)[label].astype(np.int64)
-        lbl_df = spark.createDataFrame(pd.DataFrame(cols))
-    else:
-        sz = ", cluster_size bigint" if with_sizes else ""
-        lbl_df = spark.createDataFrame(
-            [], f"{node_col} string, cluster_id string{sz}"
-        )
-    if nodes is None:
-        return lbl_df
-    out = nodes.select(node_col).join(lbl_df, node_col, "left")
-    proj = [
-        F.col(node_col),
-        F.coalesce(F.col("cluster_id"), F.col(node_col)).alias("cluster_id"),
-    ]
-    if with_sizes:
-        proj.append(
-            F.coalesce(F.col("cluster_size"), F.lit(1)).alias("cluster_size")
-        )
-    return out.select(*proj)
-
-
-def pair_cluster_labels(
-    edges: DataFrame,
-    node_col: str = "image_id",
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    driver_threshold: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Label every EDGE PAIR and every endpoint NODE with its connected
-    component and component size, in one pass.
-
-    Returns ``(pair_df, node_df)``:
-      pair_df — (src_col, dst_col, pre_cluster, csize), one row per input
-      edge, labeled by the lexicographic-min member of its component;
-      node_df — (node_col, pre_cluster, csize) over the edge endpoints.
-
-    Below ``driver_threshold`` edges, both tables come out of ONE driver
-    numpy CC pass over the collected Arrow edge list: the edge→label
-    assignment is a vectorized gather (uniq[label[src_codes]]), so the
-    caller pays a single bounded collect and ZERO Spark joins or eager
-    checkpoints — this is what removes the rescore stage's serial floor
-    (BENCH/BASELINE.md per-stage attribution: the pre/bigp localCheckpoint
-    barriers plus two label joins were ~core-count-invariant seconds).
-    Above the threshold, node labels come from the distributed propagation
-    loop and pair labels from one shuffle join on ``src_col`` (both edge
-    endpoints share a component, so one side suffices). String-id contract
-    identical to connected_components."""
-    import numpy as np
-    import pandas as pd
-
-    spark = edges.sparkSession
-    driver_threshold = _resolve_driver_threshold(driver_threshold)
-    pairs = edges.select(src_col, dst_col)
-    probe = pairs.limit(driver_threshold + 1).toArrow()
-    if probe.num_rows > driver_threshold:
-        node_df = _distributed_cc(
-            None, edges, node_col, src_col, dst_col, 50, True
-        ).withColumnRenamed("cluster_id", "pre_cluster").withColumnRenamed(
-            "cluster_size", "csize"
-        )
-        pair_df = pairs.join(
-            node_df.select(
-                F.col(node_col).alias(src_col), "pre_cluster", "csize"
-            ),
-            src_col,
-        ).select(src_col, dst_col, "pre_cluster", "csize")
-        return pair_df, node_df
-    _check_edge_tbl(probe, src_col, dst_col)
-    if probe.num_rows == 0:
-        schema_p = f"{src_col} string, {dst_col} string, pre_cluster string, csize bigint"
-        schema_n = f"{node_col} string, pre_cluster string, csize bigint"
-        return (
-            spark.createDataFrame([], schema_p),
-            spark.createDataFrame([], schema_n),
-        )
-    uniq, label, ca = _numpy_cc(probe, src_col, dst_col)
-    sizes = np.bincount(label)
-    node_df = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                node_col: uniq,
-                "pre_cluster": uniq[label],
-                "csize": sizes[label].astype(np.int64),
-            }
-        )
-    )
-    el = label[ca]
-    pair_df = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                src_col: probe.column(src_col).to_numpy(zero_copy_only=False),
-                dst_col: probe.column(dst_col).to_numpy(zero_copy_only=False),
-                "pre_cluster": uniq[el],
-                "csize": sizes[el].astype(np.int64),
-            }
-        )
-    )
-    return pair_df, node_df
-
-
-def _distributed_cc(
-    nodes: DataFrame | None,
-    edges: DataFrame,
-    node_col: str,
-    src_col: str,
-    dst_col: str,
-    max_iter: int,
-    with_sizes: bool,
-) -> DataFrame:
+    The symmetric edge set comes from one explode of both orientations
+    rather than a self-union: Catalyst's constraint inference rewrites a
+    union's branch constraints by output attribute, and for a self-union of
+    a filtered input (e.g. ``id_a < id_b``) that rewrite fails."""
     sym = (
-        edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-        .union(edges.select(F.col(dst_col).alias("u"), F.col(src_col).alias("v")))
+        edges.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("id_a").alias("u"), F.col("id_b").alias("v")),
+                    F.struct(F.col("id_b").alias("u"), F.col("id_a").alias("v")),
+                )
+            ).alias("e")
+        )
+        .select("e.u", "e.v")
         .distinct()
+        .localCheckpoint()
     )
-    if nodes is None:
-        node_src = sym.select(F.col("u").alias(node_col)).distinct()
-    else:
-        node_src = nodes.select(node_col)
-    labels = node_src.select(
-        F.col(node_col).alias("u"), F.col(node_col).alias("lbl")
-    ).localCheckpoint()
-    sym = sym.localCheckpoint()
+    labels = sym.select("u", F.col("u").alias("lbl")).distinct().localCheckpoint()
 
-    for _ in range(max_iter):
-        nbr = (
-            sym.join(labels.withColumnRenamed("u", "v2"), sym["v"] == F.col("v2"))
-            .select(F.col("u"), F.col("lbl"))
-        )
-        new_labels = (
-            labels.select("u", "lbl")
-            .union(nbr)
-            .groupBy("u")
-            .agg(F.min("lbl").alias("lbl"))
-        )
+    for _ in range(MAX_ITER):
+        nbr = sym.join(
+            labels.withColumnRenamed("u", "v2"), sym["v"] == F.col("v2")
+        ).select("u", "lbl")
+        new_labels = labels.union(nbr).groupBy("u").agg(F.min("lbl").alias("lbl"))
         # pointer jumping: lbl <- lbl(lbl)
         jumped = (
             new_labels.alias("a")
@@ -316,22 +212,15 @@ def _distributed_cc(
         if changed == 0:
             break
     else:
-        # loop exhausted max_iter without changed == 0: labels may still be
-        # mid-propagation (split components). Pointer jumping converges in
-        # O(log diameter) iterations, so hitting 50 means a pathological
-        # graph — surface it instead of returning silently-wrong clusters.
+        # pointer jumping converges in O(log diameter) iterations, so
+        # hitting MAX_ITER means a pathological graph — surface it instead
+        # of returning split components
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} iterations "
+            f"connected components did not converge in {MAX_ITER} iterations "
             f"(last delta: {changed} labels still changing)"
         )
     out = labels.select(
-        F.col("u").alias(node_col), F.col("lbl").alias("cluster_id")
+        F.col("u").alias("image_id"), F.col("lbl").alias("pre_cluster")
     )
-    if with_sizes:
-        out = out.join(
-            out.groupBy("cluster_id").agg(
-                F.count("*").alias("cluster_size")
-            ),
-            "cluster_id",
-        ).select(node_col, "cluster_id", "cluster_size")
-    return out
+    sizes = out.groupBy("pre_cluster").agg(F.count(F.lit(1)).alias("csize"))
+    return out.join(sizes, "pre_cluster").select("image_id", "pre_cluster", "csize")

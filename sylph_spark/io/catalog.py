@@ -8,12 +8,10 @@ SketchConfig hash; a stage is resumable iff a committed manifest with the
 same config hash exists (the batch analog of streaming state recovery —
 SURVEY.md §2.8).
 
-Backend: Iceberg when a runtime catalog is configured (``SYLPH_ICEBERG=1``
-with spark.jars.packages resolvable), else Parquet directories with
-``_MANIFEST.json`` / ``_LINEAGE`` metadata reproducing the needed semantics:
-atomic commit (manifest written last), snapshot id, per-file lineage rows
-(from the parquet footers), and an append-only ``_metrics`` table. The
-pipeline sees one API.
+Backend: Parquet directories with ``_MANIFEST.json`` / ``_LINEAGE``
+metadata reproducing the table-format semantics the pipeline needs: atomic
+commit (manifest written last), snapshot id, per-file lineage rows (from
+the parquet footers), and an append-only ``_metrics`` table.
 """
 
 from __future__ import annotations

@@ -9,8 +9,6 @@ import os
 
 from pyspark.sql import DataFrame
 
-from .catalog import StageCatalog
-
 
 def write_tsv(
     df: DataFrame,
@@ -90,25 +88,3 @@ def write_tsv(
         json.dump(manifest, f, indent=2)
     return manifest
 
-
-def write_run_report(catalog: StageCatalog, path: str) -> dict:
-    """JSON run summary: per-stage rows/partitions/snapshots + metrics."""
-    report = {
-        "stages": {},
-        "metrics": catalog.metrics(),
-    }
-    from ..pipeline import STAGES
-
-    for stage in STAGES:
-        m = catalog.manifest(stage)
-        if m:
-            report["stages"][stage] = {
-                "rows": m.rows,
-                "partitions": m.partitions,
-                "snapshot_id": m.snapshot_id,
-                "config_hash": m.config_hash,
-            }
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "w") as f:
-        json.dump(report, f, indent=2)
-    return report

@@ -372,26 +372,14 @@ def image_shingles_batch(
     return _unique_per_segment(np.concatenate(pids), np.concatenate(vals))
 
 
-def caption_shingles_batch(captions: list, k: int, c: int):
-    """caption_shingles over a whole batch → (pid, vals) sorted flat pairs."""
-    bufs = [
-        np.frombuffer(cap.encode("utf-8", errors="replace"), dtype=np.uint8)
-        for cap in captions
-    ]
-    lens = np.array([b.size for b in bufs], dtype=np.int64)
-    if lens.sum() == 0:
-        return np.empty(0, np.int64), np.empty(0, U64)
-    flat = np.concatenate([b for b in bufs if b.size])
-    return caption_shingles_flat(flat, lens, k, c)
-
-
 def caption_shingles_flat(flat: np.ndarray, lens: np.ndarray, k: int, c: int):
-    """caption_shingles_batch over captions ALREADY flattened to one UTF-8
-    byte buffer (``flat``) with per-caption byte lengths (``lens``) — the
-    zero-copy entry point for Arrow string columns, whose data buffer IS
-    this layout (udfs.make_sketch_arrow_fn). Bit-identical to the list
-    form: Python's utf-8 encode of an Arrow-delivered string round-trips
-    the Arrow bytes exactly."""
+    """caption_shingles over a whole batch of captions flattened to one
+    UTF-8 byte buffer (``flat``) with per-caption byte lengths (``lens``)
+    → (pid, vals) sorted flat pairs. This is the zero-copy entry point for
+    Arrow string columns, whose data buffer IS this layout
+    (udfs.make_sketch_arrow_fn); it is bit-identical to per-caption
+    caption_shingles, since Python's utf-8 encode of an Arrow-delivered
+    string round-trips the Arrow bytes exactly."""
     if flat.size == 0:
         return np.empty(0, np.int64), np.empty(0, U64)
     packed_all = _pack_windows_u64(flat, k)  # windows over the flat buffer

@@ -63,7 +63,7 @@ from pyspark.sql import types as T
 from pyspark.util import inheritable_thread_target
 
 from . import udfs
-from .cc import connected_components, pair_cluster_labels
+from .cc import component_labels, connected_components
 from .config import SketchConfig
 from .io.catalog import StageCatalog
 from .session import heavy_payload_batches
@@ -119,12 +119,10 @@ def lcs_prefilter_stats(
     suffix automaton (after the in-UDF equal-caption short-circuit) — ONE
     aggregation, no UDF run (the bench counter for the short-circuit's
     effectiveness)."""
-    p = DedupPipeline.__new__(DedupPipeline)
-    p.spark, p.cfg = spark, cfg
     automaton = F.col("cap_a") != F.col("cap_b")
+    base = DedupPipeline(spark, cfg)._gate_base(scored, sketches)
     row = (
-        p._gate_base(scored, sketches)
-        .agg(
+        base.agg(
             F.count(F.lit(1)).alias("hamming_pairs"),
             F.sum(automaton.cast("long")).alias("lcs_udf_pairs"),
         )
@@ -197,10 +195,15 @@ _JOB_GROUP_PROPS = (
 
 
 class DedupPipeline:
-    def __init__(self, spark: SparkSession, cfg: SketchConfig, workdir: str):
+    def __init__(
+        self, spark: SparkSession, cfg: SketchConfig, workdir: str | None = None
+    ):
+        """``workdir`` holds the stage catalog that ``run`` commits to;
+        without one only the volatile materializer and the stage builders
+        are usable."""
         self.spark = spark
         self.cfg = cfg
-        self.catalog = StageCatalog(spark, workdir)
+        self.catalog = StageCatalog(spark, workdir) if workdir is not None else None
         self.h = cfg.config_hash()
 
     # -- stage bodies ------------------------------------------------------
@@ -264,43 +267,48 @@ class DedupPipeline:
         rare = counts.filter(F.col("cnt") <= limit).select("shingle")
         # three LSH families (source-aware banding): combined wide/shallow
         # for cross-modal partial similarity; per-modality narrow/deep for
-        # near-identical-in-that-family pairs (see SketchConfig)
-        fb, fr = cfg.family_bands, cfg.family_rows
+        # near-identical-in-that-family pairs (see SketchConfig), all banded
+        # by one multi-family UDF over (image_id, img_shingles, cap_shingles)
         if n_vocab <= cfg.broadcast_rare_max:
-            # broadcast the rare vocabulary into one multi-family band UDF:
-            # no explode, no re-aggregation shuffle. toArrow() lands the
-            # column as a numpy-backed buffer (no Python-object loop);
+            # broadcast the rare vocabulary; the UDF filters in-task: no
+            # explode, no re-aggregation shuffle. toArrow() lands the column
+            # as a numpy-backed buffer (no Python-object loop);
             # |rare| <= n_vocab <= cap bounds the driver transfer, and the
             # sc.broadcast ships it once per executor (not once per task)
             import numpy as np
 
             rare_arr = np.sort(rare.toArrow().column("shingle").to_numpy())
             rare_bc = self.spark.sparkContext.broadcast(rare_arr)
-            bands = sketches.select(
-                "image_id", "img_shingles", "cap_shingles"
-            ).mapInArrow(
-                udfs.make_multi_band_fn(cfg, rare_bc), schema=udfs.BAND_SCHEMA
-            )
+            band_input = sketches.select("image_id", "img_shingles", "cap_shingles")
         else:
-
-            def family_bands(col: str, offset: int, nb: int, rpb: int) -> DataFrame:
-                band_input = (
-                    sketches.select("image_id", F.explode(col).alias("shingle"))
-                    .join(rare, "shingle")
-                    .groupBy("image_id")
-                    .agg(F.collect_list("shingle").alias("shingles"))
-                )
-                return band_input.mapInArrow(
-                    udfs.make_band_fn(cfg, offset, nb, rpb), schema=udfs.BAND_SCHEMA
-                )
-
-            bands = (
-                family_bands("shingles", 0, cfg.num_bands, cfg.rows_per_band)
-                .unionByName(family_bands("img_shingles", cfg.num_bands, fb, fr))
-                .unionByName(
-                    family_bands("cap_shingles", cfg.num_bands + fb, fb, fr)
+            # vocabulary too large to broadcast: filter by a join instead —
+            # one explode of both modalities (tagged), one join with the
+            # rare set, one per-item regroup (collect_list skips the other
+            # modality's nulls). Items left with no rare shingle drop out,
+            # as they emit no band rows on the broadcast path either.
+            rare_bc = None
+            tagged = (
+                "concat(transform(img_shingles, s -> "
+                "named_struct('img', true, 'shingle', s)), "
+                "transform(cap_shingles, s -> "
+                "named_struct('img', false, 'shingle', s)))"
+            )
+            band_input = (
+                sketches.select("image_id", F.inline(F.expr(tagged)))
+                .join(rare, "shingle")
+                .groupBy("image_id")
+                .agg(
+                    F.expr("collect_list(IF(img, shingle, NULL))").alias(
+                        "img_shingles"
+                    ),
+                    F.expr("collect_list(IF(img, NULL, shingle))").alias(
+                        "cap_shingles"
+                    ),
                 )
             )
+        bands = band_input.mapInArrow(
+            udfs.make_multi_band_fn(cfg, rare_bc), schema=udfs.BAND_SCHEMA
+        )
         # Bucketize in ONE hash aggregate (no window: the previous
         # row_number/count-over pair forced a full sort-shuffle of the band
         # rows and recomputed it for both join sides). sort_array makes the
@@ -504,14 +512,14 @@ class DedupPipeline:
         # worst-scaling heavy barrier (BENCH/BASELINE.md per-stage table).
         limit = self._band_df_limit(n_items)
         # preliminary clusters = competition scope (first-pass edges only).
-        # pair_cluster_labels returns BOTH the per-pair and the per-node
+        # component_labels returns BOTH the per-pair and the per-node
         # label tables out of one driver CC pass below the edge threshold:
         # no label join onto `first`, no pre/bigp localCheckpoint barriers
         # (each was a core-count-invariant eager job — the rescore stage's
         # measured serial floor, BENCH/BASELINE.md per-stage attribution).
         # The whole rescore DAG now materializes lazily in the verified
         # barrier as one job.
-        pair_lab, node_lab = pair_cluster_labels(first.select("id_a", "id_b"))
+        pair_lab, node_lab = component_labels(first)
         # 2-item-cluster bypass: a winner for shingle s is, by the max_by
         # construction, an item CONTAINING s within the pair's cluster — in
         # a cluster of exactly {a, b} that is always a or b, so every
@@ -675,8 +683,7 @@ class DedupPipeline:
         )
 
     def _stage_clusters(self, sketches: DataFrame, gated: DataFrame) -> DataFrame:
-        nodes = sketches.select("image_id")
-        return connected_components(nodes, gated.select("id_a", "id_b"))
+        return connected_components(sketches, gated)
 
     def _stage_survivors(self, clusters: DataFrame, verified: DataFrame) -> DataFrame:
         """One representative per cluster = argmax by mean verified
@@ -796,9 +803,9 @@ def run_volatile(
     per-stage attribution behind the scaling-efficiency evidence
     (BENCH/BASELINE.md). Lazy stages (candidates, verified, survivors) are
     fused by Catalyst into the next barrier and show up there."""
-    p = DedupPipeline.__new__(DedupPipeline)
-    p.spark, p.cfg = spark, cfg
-    return p.run_graph(images, _materialize_volatile, stage_times)
+    return DedupPipeline(spark, cfg).run_graph(
+        images, _materialize_volatile, stage_times
+    )
 
 
 def images_df_from_pandas(spark: SparkSession, images: pd.DataFrame) -> DataFrame:

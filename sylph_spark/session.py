@@ -65,18 +65,15 @@ def build_spark(
     # "heavyweight init once", applied to imports: numpy+pandas+pyarrow cost
     # ~1.5 s per cold worker, paid once per core in the first Python stage
     # of a fresh session without this). sylph_spark.daemon preloads them and
-    # then defers to the stock pyspark daemon loop. The repo root is put on
-    # the workers' PYTHONPATH explicitly — worker processes only inherit the
-    # driver's os.environ, not its sys.path edits.
+    # then defers to the stock pyspark daemon loop. The repo root reaches
+    # the daemon and workers as spark.executorEnv.PYTHONPATH, which pyspark
+    # merges into their PYTHONPATH — they do not see the driver's sys.path
+    # edits, and the driver process environment stays untouched.
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    prev = os.environ.get("PYTHONPATH", "")
-    if repo_root not in prev.split(":"):
-        os.environ["PYTHONPATH"] = (
-            repo_root + (":" + prev if prev else "")
-        )
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
+        .config("spark.executorEnv.PYTHONPATH", repo_root)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

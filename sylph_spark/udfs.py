@@ -180,57 +180,20 @@ def _family_band_arrays(
     return ids_rep, bands, K.u64_to_i64(bh.ravel())
 
 
-def _band_batch(ids_rep, bands, hashes) -> pa.RecordBatch:
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.array(ids_rep, pa.string()),
-            pa.array(bands, pa.int32()),
-            pa.array(hashes, pa.int64()),
-        ],
-        names=["image_id", "band", "band_hash"],
-    )
-
-
-def make_band_fn(
-    cfg: SketchConfig,
-    band_offset: int = 0,
-    num_bands: int | None = None,
-    rows_per_band: int | None = None,
-):
-    """mapInArrow: (image_id, shingles) → (image_id, band, band_hash) tall
-    rows, whole-batch vectorized (no per-item Python loop).
-
-    ``band_offset`` namespaces LSH families (source-aware banding): the
-    combined set bands wide/shallow; the image-only and caption-only
-    families band narrow/deep — each family only needs to catch pairs
-    near-identical in that modality."""
-    nb = num_bands or cfg.num_bands
-    rpb = rows_per_band or cfg.rows_per_band
-    seeds = K.minhash_seeds(nb * rpb, cfg.seed)
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            idx_id = batch.schema.get_field_index("image_id")
-            ids_np = np.array(batch.column(idx_id).to_pylist(), dtype=object)
-            flat, counts = _list_col_numpy(batch, "shingles")
-            pid = np.repeat(np.arange(batch.num_rows), counts)
-            yield _band_batch(
-                *_family_band_arrays(
-                    K.i64_to_u64(flat), pid, ids_np, nb, rpb, band_offset, seeds
-                )
-            )
-
-    return fn
-
-
 def make_multi_band_fn(cfg: SketchConfig, rare_bc):
-    """mapInArrow: sketches(image_id, img_shingles, cap_shingles) → band rows
-    for ALL THREE LSH families in one pass, filtering stop-shingles against a
-    broadcast sorted rare-set (np.searchsorted membership) — zero shuffles
-    until the bucket join. ``rare_bc`` is a SparkContext.broadcast of the
-    sorted int64 vocab: a broadcast ships ONCE per executor, while a closure
-    capture would re-deserialize the (potentially multi-MB) array with every
-    task. The join-based path handles the 10¹²-scale case."""
+    """mapInArrow: (image_id, img_shingles, cap_shingles) → (image_id, band,
+    band_hash) rows for ALL THREE LSH families in one whole-batch vectorized
+    pass. Source-aware banding: the combined img ∪ cap set bands
+    wide/shallow; the image-only and caption-only families band
+    narrow/deep, under band-number offsets that namespace the families.
+
+    ``rare_bc`` is a SparkContext.broadcast of the sorted int64 rare
+    (non-stop-shingle) vocabulary, filtered in-task by np.searchsorted
+    membership — zero shuffles until the bucket join; a broadcast ships
+    ONCE per executor, while a closure capture would re-deserialize the
+    (potentially multi-MB) array with every task. ``rare_bc=None`` means
+    the input lists are already filtered (the join path the candidates
+    stage takes when the vocabulary is too large to broadcast)."""
     families = (
         (0, cfg.num_bands, cfg.rows_per_band),
         (cfg.num_bands, cfg.family_bands, cfg.family_rows),
@@ -250,19 +213,20 @@ def make_multi_band_fn(cfg: SketchConfig, rare_bc):
         return (idx < rare.size) & (rare[idx_c] == flat_i64)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        rare = rare_bc.value
+        rare = None if rare_bc is None else rare_bc.value
         for batch in batches:
             n = batch.num_rows
             idx_id = batch.schema.get_field_index("image_id")
             ids_np = np.array(batch.column(idx_id).to_pylist(), dtype=object)
-            img_flat, img_cnt = _list_col_numpy(batch, "img_shingles")
-            cap_flat, cap_cnt = _list_col_numpy(batch, "cap_shingles")
-            img_pid = np.repeat(np.arange(n), img_cnt)
-            cap_pid = np.repeat(np.arange(n), cap_cnt)
-            im = keep_mask(rare, img_flat)
-            cm = keep_mask(rare, cap_flat)
-            img_f, img_p = img_flat[im], img_pid[im]
-            cap_f, cap_p = cap_flat[cm], cap_pid[cm]
+            img_f, img_cnt = _list_col_numpy(batch, "img_shingles")
+            cap_f, cap_cnt = _list_col_numpy(batch, "cap_shingles")
+            img_p = np.repeat(np.arange(n), img_cnt)
+            cap_p = np.repeat(np.arange(n), cap_cnt)
+            if rare is not None:
+                im = keep_mask(rare, img_f)
+                cm = keep_mask(rare, cap_f)
+                img_f, img_p = img_f[im], img_p[im]
+                cap_f, cap_p = cap_f[cm], cap_p[cm]
             # combined family = img ∪ cap multiset per item (min over the
             # concatenation ≡ min over the union); regroup by item index
             comb_p = np.concatenate([img_p, cap_p])
@@ -284,10 +248,13 @@ def make_multi_band_fn(cfg: SketchConfig, rare_bc):
                         seeds_by_n[nb * rpb],
                     )
                 )
-            yield _band_batch(
-                np.concatenate([o[0] for o in outs]),
-                np.concatenate([o[1] for o in outs]),
-                np.concatenate([o[2] for o in outs]),
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.concatenate([o[0] for o in outs]), pa.string()),
+                    pa.array(np.concatenate([o[1] for o in outs]), pa.int32()),
+                    pa.array(np.concatenate([o[2] for o in outs]), pa.int64()),
+                ],
+                names=["image_id", "band", "band_hash"],
             )
 
     return fn
@@ -698,7 +665,7 @@ def make_score_arrow_fn(cfg: SketchConfig, force_slow: bool = False):
     return fn
 
 
-def make_lcs_fn(short_circuit: bool = True):
+def make_lcs_fn():
     """pandas_udf batch: (caption_a, caption_b) → longest common substring
     length via suffix automaton (kernels.longest_common_substring).
 
@@ -710,14 +677,13 @@ def make_lcs_fn(short_circuit: bool = True):
     Measured against the alternatives (JVM k-gram arrays_overlap
     prefilter at ~360 µs/pair, a DataFrame-level eq/ne branch split that
     doubles the gate's join work): in-UDF short-circuiting is the only
-    variant that is never slower than the plain loop at any volume.
-    ``short_circuit=False`` keeps the pure per-pair loop for parity tests."""
+    variant that is never slower than the plain loop at any volume."""
 
     def fn(a: pd.Series, b: pd.Series) -> pd.Series:
         av = a.fillna("")
         bv = b.fillna("")
         out = pd.Series(np.zeros(len(av), dtype=np.int64))
-        eq = (av == bv).to_numpy() if short_circuit else np.zeros(len(av), bool)
+        eq = (av == bv).to_numpy()
         out[eq] = av[eq].str.len().to_numpy(dtype=np.int64)
         ne = np.flatnonzero(~eq)
         out.iloc[ne] = [

@@ -9,6 +9,7 @@ contain.rs:817-847, contain.rs:692-713).
 import math
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -284,6 +285,17 @@ class TestSuffixLCS:
             assert K._lcs_suffix_array(ab, bb) == best
 
 
+def _caption_shingles_arrow(arr, k: int, c: int):
+    """caption_shingles_flat fed straight from an Arrow string column's raw
+    buffers, as make_sketch_arrow_fn does (a SLICED array's offsets buffer
+    is unsliced, so index by the array's own offset)."""
+    n = len(arr)
+    raw_off = np.frombuffer(arr.buffers()[1], dtype=np.int32)
+    off = raw_off[arr.offset : arr.offset + n + 1].astype(np.int64)
+    data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)
+    return K.caption_shingles_flat(data[off[0] : off[-1]], np.diff(off), k, c)
+
+
 class TestSketchBatchParity:
     """The whole-batch sketch kernels must be BIT-identical to the per-image
     path (the batch path is what runs in production's mapInArrow)."""
@@ -313,7 +325,9 @@ class TestSketchBatchParity:
         img_pid, img_vals = K.image_shingles_batch(
             grays, cfg.block_px, cfg.q_shift, cfg.k_block, cfg.c, cfg.n_grids
         )
-        cap_pid, cap_vals = K.caption_shingles_batch(caps, cfg.k_caption, cfg.c)
+        cap_pid, cap_vals = _caption_shingles_arrow(
+            pa.array(caps, pa.string()), cfg.k_caption, cfg.c
+        )
         uni_pid, uni_vals = K.union_per_segment(
             img_pid, img_vals, cap_pid, cap_vals
         )
@@ -333,9 +347,7 @@ class TestSketchBatchParity:
         """caption_shingles_flat fed straight from an Arrow string column's
         raw buffers (the make_sketch_arrow_fn fast path — including a
         SLICED array, whose offsets buffer is unsliced) must be
-        bit-identical to the list-of-str batch path, unicode included."""
-        import pyarrow as pa
-
+        bit-identical to per-caption caption_shingles, unicode included."""
         from sylph_spark.config import SketchConfig
 
         cfg = SketchConfig()
@@ -346,25 +358,12 @@ class TestSketchBatchParity:
             "wörld çafé ünïcode captions überall",
             "the same caption text repeated here the same caption text",
         ]
-
-        def from_arrow(arr: pa.Array):
-            n = len(arr)
-            raw_off = np.frombuffer(arr.buffers()[1], dtype=np.int32)
-            off = raw_off[arr.offset : arr.offset + n + 1].astype(np.int64)
-            data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)
-            return K.caption_shingles_flat(
-                data[off[0] : off[-1]], np.diff(off), cfg.k_caption, cfg.c
-            )
-
-        ref_pid, ref_vals = K.caption_shingles_batch(caps, cfg.k_caption, cfg.c)
         arr = pa.array(caps, pa.string())
-        got_pid, got_vals = from_arrow(arr)
-        np.testing.assert_array_equal(got_pid, ref_pid)
-        np.testing.assert_array_equal(got_vals, ref_vals)
         # sliced array: same captions minus the first → pids shift by 1
-        sref_pid, sref_vals = K.caption_shingles_batch(
-            caps[1:], cfg.k_caption, cfg.c
-        )
-        sgot_pid, sgot_vals = from_arrow(arr.slice(1, len(caps) - 1))
-        np.testing.assert_array_equal(sgot_pid, sref_pid)
-        np.testing.assert_array_equal(sgot_vals, sref_vals)
+        for got_caps, got_arr in ((caps, arr), (caps[1:], arr.slice(1))):
+            pid, vals = _caption_shingles_arrow(got_arr, cfg.k_caption, cfg.c)
+            assert np.all(np.diff(pid) >= 0) and np.all(pid < len(got_caps))
+            for i, cap in enumerate(got_caps):
+                np.testing.assert_array_equal(
+                    vals[pid == i], K.caption_shingles(cap, cfg.k_caption, cfg.c)
+                )

@@ -249,8 +249,7 @@ class TestStreaming:
             r["image_id"]: (sorted(r["shingles"]), r["simhash"])
             for r in spark.read.parquet(str(tmp_path / "out")).collect()
         }
-        p = DedupPipeline.__new__(DedupPipeline)
-        p.spark, p.cfg = spark, SketchConfig()
+        p = DedupPipeline(spark, SketchConfig())
         exp = {
             r["image_id"]: (sorted(r["shingles"]), r["simhash"])
             for r in p._stage_sketches(

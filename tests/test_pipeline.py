@@ -276,11 +276,14 @@ def test_lcs_short_circuit_identical(spark, spark_result):
     from sylph_spark import udfs
     from sylph_spark.pipeline import lcs_prefilter_stats
 
+    from sylph_spark import kernels as K
+
     a = pd.Series(["hello world", "same caption!", "", None, "abcdef", "x"])
     b = pd.Series(["hello brave world", "same caption!", "", "", "abXdef", None])
     fast = udfs.make_lcs_fn()(a, b)
-    slow = udfs.make_lcs_fn(short_circuit=False)(a, b)
-    assert fast.tolist() == slow.tolist()
+    assert fast.tolist() == [
+        K.longest_common_substring(x or "", y or "") for x, y in zip(a, b)
+    ]
     assert fast[1] == len("same caption!")  # equal pair short-circuited
 
     _, out, _ = spark_result
@@ -428,13 +431,13 @@ def test_dense_bucket_interleaved_families(spark):
 
 
 def test_distributed_cc_pipeline_parity(spark, corpus, spark_result, monkeypatch):
-    """VERDICT r4 #3: run the FULL pipeline with SYLPH_CC_DRIVER_THRESHOLD=0
-    so both connected_components (clusters stage) and pair_cluster_labels
-    (rescore competition scope) take the distributed propagation path — the
-    code that actually runs at 100-TB edge counts — and assert clusters,
-    rescored pairs and survivors identical to the driver fast path. Both
-    materializers of the stage graph agree too: the volatile run equals the
-    committed DedupPipeline.run."""
+    """VERDICT r4 #3: the large-scale paths give the default run's clusters,
+    rescored pairs and survivors. With SYLPH_CC_DRIVER_THRESHOLD=0 both the
+    clusters stage and the rescore competition scope take the distributed
+    CC propagation loop — the code that runs at 100-TB edge counts; with
+    broadcast_rare_max=0 the candidates stage bands through the rare-set
+    join instead of the broadcast. Both materializers of the stage graph
+    agree too: the volatile run equals the committed DedupPipeline.run."""
     from sylph_spark.pipeline import run_volatile
 
     images, _ = corpus
@@ -468,6 +471,8 @@ def test_distributed_cc_pipeline_parity(spark, corpus, spark_result, monkeypatch
         "clusters(cc)",
     }
     assert stages(spark_result[1]) == base
+    join_banding = stages(run_volatile(spark, df, SketchConfig(broadcast_rare_max=0)))
+    assert join_banding == base
     monkeypatch.setenv("SYLPH_CC_DRIVER_THRESHOLD", "0")
     dist = stages(run_volatile(spark, df, cfg))
     assert dist == base

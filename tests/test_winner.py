@@ -108,8 +108,7 @@ class TestArgmaxSurvivors:
     def test_spark_stage_matches_oracle(self, spark):
         from sylph_spark.pipeline import DedupPipeline
 
-        p = DedupPipeline.__new__(DedupPipeline)
-        p.spark, p.cfg = spark, SketchConfig()
+        p = DedupPipeline(spark, SketchConfig())
         clusters = spark.createDataFrame(self.CLUSTERS)
         verified = spark.createDataFrame(self.VERIFIED)
         got = {
@@ -121,8 +120,7 @@ class TestArgmaxSurvivors:
     def test_tie_breaks_to_min_id(self, spark):
         from sylph_spark.pipeline import DedupPipeline
 
-        p = DedupPipeline.__new__(DedupPipeline)
-        p.spark, p.cfg = spark, SketchConfig()
+        p = DedupPipeline(spark, SketchConfig())
         clusters = spark.createDataFrame(
             pd.DataFrame({"image_id": ["x", "y"], "cluster_id": ["x", "x"]})
         )
